@@ -106,6 +106,9 @@ object Tables {
     * site (aggregations, joins, per-row expressions); round-robin
     * repartition is retry-deterministic via Spark's
     * sort-before-repartition default (SPARK-23207). */
+  private val spreadDeclineLogged =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
+
   def spread(df: DataFrame, by: Column*): DataFrame = {
     val spark = df.sparkSession
     val target = spark.conf.getOption("spark.graft.spread.target")
@@ -113,8 +116,12 @@ object Tables {
       .getOrElse(spark.sparkContext.defaultParallelism)
     if (target <= 1) df
     else {
-      val parts = try scanSplitEstimate(df).getOrElse(Int.MaxValue)
-        catch { case _: Throwable => Int.MaxValue }
+      val parts = try scanSplitEstimate(df).getOrElse {
+          if (spreadDeclineLogged.compareAndSet(false, true))
+            System.err.println("[spread] declined: the plan has no file " +
+              "relation, so no split estimate (logged once per JVM)")
+          Int.MaxValue
+        } catch { case _: Throwable => Int.MaxValue }
       if (parts >= target) df
       // hash-by-key when the caller names one: skips round-robin's
       // sort-before-repartition (a single-task sort of the whole input
@@ -135,14 +142,12 @@ object Tables {
     * spread, never adds a wasted exchange). None when the plan has no
     * file relation — the caller broke the scan-rooted contract and
     * spread declines to act. */
-  private def scanSplitEstimate(df: DataFrame): Option[Int] = {
+  private[graft] def scanSplitEstimate(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val maxSplit = df.sparkSession.conf
-      .get("spark.sql.files.maxPartitionBytes", "134217728")
-      .stripSuffix("b").stripSuffix("B") match {
-        case s if s.forall(_.isDigit) => s.toLong
-        case _ => 134217728L
-      }
+    // Spark's own byte-string parser, so "64m" / "128MB" mean what
+    // they mean to the scan planner
+    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val rels = df.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
         l.relation.asInstanceOf[HadoopFsRelation]

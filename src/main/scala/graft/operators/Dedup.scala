@@ -1416,7 +1416,7 @@ object Dedup {
       s"threshold must be in (0,1]: $threshold")
     // persisted: the tokenize+shingle scan feeds BOTH the frequency
     // table and the per-doc sets — without the cache the in-plan
-    // subtree evaluates twice (Prof-measured 1.6 s of the gate's 6 s
+    // subtree evaluates twice (profiler-measured 1.6 s of the gate's 6 s
     // at sf0.1). Same cache-lifetime contract as buildIdx above.
     val flat = flatIndex(docs, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -4,58 +4,18 @@ import graft.operators.Upsert
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming upsert sink — the production pattern for "a stream of
+/** Streaming CDC-apply sink — the production pattern for "a stream of
   * row versions maintains a keyed table": `foreachBatch` turns each
-  * micro-batch into one [[Upsert.mergeLatest]] against the parquet
-  * target, so the reference's load-upsert core
+  * micro-batch into a partition-pruned [[Upsert.mergeIntoManifested]]
+  * plus a key-batch delete, so the reference's load-upsert core
   * (`2.2 loading-lambda-for-mysql.py:640-700` — staged batch merged
-  * into the serving table per file) runs against a live stream with
-  * the SAME merge operator the batch pipeline uses.
-  *
-  * Semantics: within a micro-batch the latest `versionCol` per key
-  * wins (mergeLatest pre-dedup); across batches later merges overwrite
-  * earlier ones — replaying the same batch is idempotent, so the sink
-  * is effectively-once on top of foreachBatch's at-least-once
-  * contract.
-  *
-  * Scale shape: each micro-batch pays one mergeLatest (existing ⟕
-  * batch full-outer on the key) plus a snapshot rewrite. At real
-  * scale the rewrite step is [[Upsert.mergeIntoPartitioned]] against
-  * a partitioned table (only touched partitions rewrite); the
-  * snapshot form here keeps the demonstration self-contained. The
-  * `localCheckpoint` before the overwrite breaks lineage so the new
-  * snapshot does not read the files it is replacing mid-write.
+  * into the serving table per file) runs against a live stream on the
+  * manifested substrate. A concurrent reader flips atomically between
+  * published snapshots, and a crash mid-merge leaves the table serving
+  * the previous manifest. A stream without deletes is a CDC stream
+  * whose op is always `"upsert"`.
   */
 object MergeSink {
-
-  /** The scale form of [[start]]: each micro-batch lands via
-    * [[Upsert.mergeIntoManifested]] — only the batch's touched
-    * partitions are read and rewritten (manifest dir-level pruning),
-    * and a concurrent reader flips atomically between published
-    * snapshots instead of racing a directory overwrite. Max-version-
-    * wins makes a replayed micro-batch a no-op in content, so the sink
-    * stays effectively-once on foreachBatch's at-least-once contract —
-    * and unlike the snapshot form, a crash MID-merge leaves the table
-    * serving the previous manifest, not a half-written directory.
-    * Empty micro-batches are skipped (a merge would publish a new,
-    * identical epoch for nothing). */
-  def startManifested(updates: DataFrame, targetDir: String,
-                      keys: Seq[String], partitionCol: String,
-                      versionCol: String, checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    require(keys.nonEmpty, "merge sink needs at least one key column")
-    val spark = updates.sparkSession
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          Upsert.mergeIntoManifested(spark, targetDir, batch, keys,
-            partitionCol, versionCol)
-      }
-      .start()
-  }
 
   /** CDC APPLY — the Debezium-shaped ingestion path: a stream of
     * change events carrying an op column (`"delete"` vs anything
@@ -97,14 +57,17 @@ object MergeSink {
         val latest = batch.withColumn("_rn", row_number().over(w))
           .filter(col("_rn") === 1).drop("_rn")
           .localCheckpoint() // one materialization serves both halves
-        // ONE pass over the (checkpointed) net-effect rows answers all
-        // three routing questions — the former batch.isEmpty +
-        // ups.isEmpty + dels.isEmpty were three extra jobs per
-        // micro-batch, pure fixed drain overhead (r22, guide §1.2)
-        val counts = latest.agg(count(lit(1)).as("_n"),
+        // ONE pass over the (checkpointed) net-effect rows answers both
+        // routing questions — separate emptiness probes were extra
+        // jobs per micro-batch, pure fixed drain overhead (r22, guide
+        // §1.2). Each count matches its filter below: a null op is
+        // neither an upsert nor a delete, so it must not trigger a
+        // merge that would publish an epoch for nothing
+        val counts = latest.agg(
+          count(when(col(opCol) =!= "delete", lit(1))).as("_nu"),
           count(when(col(opCol) === "delete", lit(1))).as("_nd")).head()
+        val nUps = counts.getLong(0)
         val nDel = counts.getLong(1)
-        val nUps = counts.getLong(0) - nDel
         if (nUps > 0L)
           Upsert.mergeIntoManifested(spark, targetDir,
             latest.filter(col(opCol) =!= "delete").drop(opCol), keys,
@@ -114,33 +77,6 @@ object MergeSink {
             latest.filter(col(opCol) === "delete")
               .select(keys.map(col): _*),
             keys, partitionCol)
-      }
-      .start()
-  }
-
-  def start(updates: DataFrame, targetDir: String, keys: Seq[String],
-            versionCol: String, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(keys.nonEmpty, "merge sink needs at least one key column")
-    val spark = updates.sparkSession
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val path = new org.apache.hadoop.fs.Path(targetDir)
-        val existing =
-          if (fs.exists(path)) spark.read.parquet(targetDir)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema)
-        val merged = Upsert
-          .mergeLatest(existing, batch, keys, versionCol)
-          // materialize BEFORE overwriting the directory being read
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(targetDir)
-        ()
       }
       .start()
   }

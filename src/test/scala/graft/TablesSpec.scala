@@ -84,4 +84,29 @@ class TablesSpec extends SparkSpec {
       .select("user_id", "ts").orderBy("user_id", "ts").collect().toSeq
     assert(a === batch)
   }
+
+  test("scanSplitEstimate parses a unit-suffixed maxPartitionBytes") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val dir = java.nio.file.Files.createTempDirectory("graft_split")
+    // a sparse 200 MiB file: listed for its length, never read (the
+    // schema is given, so planning opens no footer)
+    val f = new java.io.RandomAccessFile(
+      dir.resolve("part-0.parquet").toFile, "rw")
+    try f.setLength(200L << 20) finally f.close()
+    val df = spark.read.schema("a LONG").parquet(dir.toString)
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "64m")
+      assert(Tables.scanSplitEstimate(df) == Some(4))
+      spark.conf.set(key, "128MB")
+      assert(Tables.scanSplitEstimate(df) == Some(2))
+      spark.conf.set(key, (32L << 20).toString)
+      assert(Tables.scanSplitEstimate(df) == Some(7))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // no file relation: no estimate, so spread declines
+    assert(Tables.scanSplitEstimate(spark.range(10).toDF()).isEmpty)
+  }
 }

@@ -88,4 +88,37 @@ class AuditLogSpec extends SparkSpec {
     assert(audit.checkStatus("loading", "f_never", 1800, now,
       exact = true) == 0)
   }
+
+  test("a probe racing appends never hides a row: every appended row " +
+      "stays visible to the same AuditLog") {
+    val dir = Files.createTempDirectory("graft_audit_race").toString
+    val audit = new AuditLog(spark, dir)
+    val now = System.currentTimeMillis()
+    val n = 300
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val probes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    // readers memoize every file they parse; a file parsed mid-write
+    // must never pin an empty row set
+    val readers = (1 to 2).map { _ =>
+      val t = new Thread(() =>
+        try while (!done.get) {
+          audit.successTargets("loading")
+          probes.incrementAndGet()
+        } catch { case e: Throwable => failure.set(e) })
+      t.start()
+      t
+    }
+    try (1 to n).foreach(i => audit.append("loading", s"f$i", 1, now))
+    finally {
+      done.set(true)
+      readers.foreach(_.join())
+    }
+    assert(failure.get == null, s"reader threw: ${failure.get}")
+    assert(probes.get > 0L)
+    val want = (1 to n).map(i => s"f$i").toSet
+    val got = audit.successTargets("loading")
+    assert(got == want, s"rows hidden from the memo: ${want -- got}")
+    assert(audit.table().count() == n)
+  }
 }

@@ -41,4 +41,16 @@ class ListingDispatchSpec extends SparkSpec {
     GraftExtensions.install(spark)
     assert(spark.conf.get(key) == "100000")
   }
+
+  test("thresholdExplicitlySet: false on a fresh session for an unset " +
+      "key, true after spark.conf.set") {
+    // the probe reflects into sessionState; if a Spark upgrade breaks
+    // that, it reports true for every key and scheme dispatch silently
+    // stops — this pins the reflection to a working answer
+    val fresh = spark.newSession()
+    val unset = "spark.sql.files.openCostInBytes"
+    assert(!GraftExtensions.thresholdExplicitlySet(fresh, unset))
+    fresh.conf.set(unset, "8m")
+    assert(GraftExtensions.thresholdExplicitlySet(fresh, unset))
+  }
 }

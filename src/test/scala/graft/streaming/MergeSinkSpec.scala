@@ -14,27 +14,28 @@ class MergeSinkSpec extends SparkSpec {
     val target = s"$dir/table"
     val mem = MemoryStream[(Long, String, Long)]
     val updates = mem.toDF().toDF("k", "v", "ver")
-    val q = MergeSink.start(updates, target, Seq("k"), "ver",
-      s"$dir/ckpt",
+      .withColumn("part", lit("p")).withColumn("op", lit("upsert"))
+    val q = MergeSink.startCdc(updates, target, Seq("part", "k"), "part",
+      "ver", "op", s"$dir/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def got(): Seq[(Long, String, Long)] =
+      Upsert.readManifested(spark, target).select("k", "v", "ver")
+        .orderBy("k").as[(Long, String, Long)].collect().toSeq
     try {
       // batch 1 creates the table; in-batch dup on k=1: latest ver wins
       mem.addData((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L))
       q.processAllAvailable()
-      assert(spark.read.parquet(target).count() == 2)
-      assert(spark.read.parquet(target).filter($"k" === 1)
-        .select("v").as[String].head() == "a1")
+      assert(got() == Seq((1L, "a1", 2L), (2L, "b0", 1L)))
       // batch 2 updates k=2, inserts k=3
       mem.addData((2L, "b1", 5L), (3L, "c0", 1L))
       q.processAllAvailable()
-      val fin = spark.read.parquet(target)
-        .orderBy("k").as[(Long, String, Long)].collect().toSeq
+      val fin = got()
       assert(fin == Seq((1L, "a1", 2L), (2L, "b1", 5L), (3L, "c0", 1L)))
       // equivalence: the same updates as ONE batch merge into empty
       val all = Seq((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L),
         (2L, "b1", 5L), (3L, "c0", 1L)).toDF("k", "v", "ver")
       val empty = all.filter(lit(false))
-      val oneShot = Upsert.mergeLatest(empty, all, Seq("k"), "ver")
+      val oneShot = Upsert.mergeVersioned(empty, all, Seq("k"), "ver")
         .orderBy("k").as[(Long, String, Long)].collect().toSeq
       assert(oneShot == fin)
     } finally q.stop()
@@ -86,6 +87,32 @@ class MergeSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("cdc sink: a batch whose rows all carry a null op publishes " +
+      "no epoch") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("mergesinknull").toString
+    val target = s"$dir/table"
+    val mem = MemoryStream[(Long, String, Double, Long, String)]
+    val events = mem.toDF().toDF("k", "part", "v", "ver", "op")
+    val q = MergeSink.startCdc(events, target, Seq("part", "k"),
+      "part", "ver", "op", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      mem.addData((1L, "a", 1.0, 1L, "upsert"), (2L, "b", 2.0, 1L, "upsert"))
+      q.processAllAvailable()
+      val epoch = Upsert.manifestedEpoch(spark, target)
+      assert(epoch.isDefined)
+      // a null op is neither an upsert nor a delete: the filter drops
+      // these rows, so the batch must not merge an empty frame
+      mem.addData((3L, "a", 3.0, 2L, null), (1L, "a", 9.0, 2L, null))
+      q.processAllAvailable()
+      assert(Upsert.manifestedEpoch(spark, target) == epoch)
+      assert(Upsert.readManifested(spark, target)
+        .select($"k", $"v").as[(Long, Double)].collect().toSet ==
+        Set((1L, 1.0), (2L, 2.0)))
+    } finally q.stop()
+  }
+
   test("manifested sink: partition-pruned reader-atomic merges equal " +
       "the order-free max-version model; replay is a content no-op") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -93,8 +120,9 @@ class MergeSinkSpec extends SparkSpec {
     val target = s"$dir/table"
     val mem = MemoryStream[(Long, String, Double, Long)]
     val updates = mem.toDF().toDF("k", "part", "v", "ver")
-    val q = MergeSink.startManifested(updates, target, Seq("part", "k"),
-      "part", "ver", s"$dir/ckpt",
+      .withColumn("op", lit("upsert"))
+    val q = MergeSink.startCdc(updates, target, Seq("part", "k"),
+      "part", "ver", "op", s"$dir/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     try {
       mem.addData((1L, "a", 1.0, 1L), (2L, "a", 2.0, 1L), (3L, "b", 3.0, 1L))
